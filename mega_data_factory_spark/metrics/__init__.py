@@ -10,7 +10,10 @@ and count-derived columns are populated, latency columns are NULL.
 
 from __future__ import annotations
 
-from pyspark.sql import SparkSession
+import math
+from concurrent.futures import ThreadPoolExecutor
+
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     DoubleType,
@@ -20,6 +23,8 @@ from pyspark.sql.types import (
     StructType,
     TimestampType,
 )
+
+from mega_data_factory_spark.functions.text import sql_string_literal
 
 OPERATOR_METRICS_SCHEMA = StructType(
     [
@@ -105,57 +110,65 @@ def write_store_metrics(
     from mega_data_factory_spark.operators.dedup import store_stats
 
     st = store_stats(spark, store_path)
-    row = _one_slice_df(
-        spark,
-        [
-            (
-                run_id,
-                pipeline,
-                operator_name,
-                store_path,
-                event,
-                int(st["rows"]),
-                int(st["files"]),
-                int(st["bytes"]),
-                rows_before,
-            )
-        ],
-        "run_id string, pipeline string, operator_name string, store_path string, "
-        "event string, rows long, files long, bytes long, rows_before long",
-    ).withColumn("timestamp", F.current_timestamp())
-    row.select([f.name for f in STORE_METRICS_SCHEMA.fields]).write.mode("append").parquet(
-        f"{base_path}/stores"
+    row = (run_id, pipeline, operator_name, store_path, event, st["rows"], st["files"], st["bytes"], rows_before)
+    local_rows_df(spark, [row], STORE_METRICS_SCHEMA).write.mode("append").parquet(f"{base_path}/stores")
+
+
+_SQL_TYPES = {StringType(): "STRING", LongType(): "BIGINT", DoubleType(): "DOUBLE"}
+
+
+def _sql_value(v, dtype) -> str:
+    if v is None:
+        return f"CAST(NULL AS {_SQL_TYPES[dtype]})"
+    if dtype == StringType():
+        return sql_string_literal(str(v))
+    if dtype == LongType():
+        return f"{int(v)}L"
+    v = float(v)
+    if math.isfinite(v):
+        return f"{v!r}D"
+    return f"CAST('{v!r}' AS DOUBLE)"  # 'nan' / 'inf' / '-inf'
+
+
+def local_rows_df(spark: SparkSession, rows: list[tuple], schema: StructType) -> DataFrame:
+    """Driver-small metric rows as a one-partition local relation in
+    ``schema``'s column order. Each row holds the values of the schema's
+    non-timestamp fields in order; timestamp fields read
+    ``current_timestamp()``.
+
+    One ``SELECT … FROM VALUES …`` plans as a ``LocalTableScan``: the
+    write is one JVM-only task, with no Python worker to start and no
+    pickled rows to ship. A frame built from a Python RDD (or from
+    ``createDataFrame(list)``) needs a Python worker per write and starts
+    the session's first one on a cold run: the three run-metrics writes
+    took ~1.2 s that way against ~0.2 s here (4 vCPUs). COALESCE(1) keeps
+    one task and one output file per write; the frames are a few rows by
+    contract."""
+    fields = [f for f in schema.fields if f.dataType != TimestampType()]
+    names = ", ".join(f"`{f.name}`" for f in fields)
+    # zero rows: one typed NULL row filtered away keeps the schema
+    values = rows or [(None,) * len(fields)]
+    tuples = ", ".join(
+        "(" + ", ".join(_sql_value(v, f.dataType) for v, f in zip(row, fields, strict=True)) + ")"
+        for row in values
     )
-
-
-def _one_slice_df(spark: SparkSession, rows: list, schema: str):
-    """createDataFrame for driver-small metric rows as ONE input slice.
-
-    ``createDataFrame(list)`` parallelizes into ``defaultParallelism``
-    slices (32 locally), so each tiny metrics write launched a 32-task
-    job; measured round 12, that made the three-level metrics write cost
-    ~1.7s per pipeline run (~0.57s per write) of pure task-launch
-    overhead — the single largest FIXED cost of the recipe bench lines
-    after the operator work itself. One explicit slice keeps each write
-    a one-task job (~0.27s) and one output file; the frames are a few
-    rows by contract, so a single slice loses no parallelism."""
-    return spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
+    select = ", ".join(
+        f"current_timestamp() AS `{f.name}`" if f.dataType == TimestampType() else f"`{f.name}`"
+        for f in schema.fields
+    )
+    where = "" if rows else " WHERE false"
+    return spark.sql(f"SELECT /*+ COALESCE(1) */ {select} FROM VALUES {tuples} AS t({names}){where}")
 
 
 def write_metrics(spark: SparkSession, result, base_path: str) -> None:
-    """Write runs/stages/operators parquet under ``base_path`` (append)."""
-    now = F.current_timestamp()
-
+    """Write runs/stages/operators parquet under ``base_path`` (append).
+    The three tables are independent one-task writes, so they run
+    concurrently on driver threads (the Pipeline.run two-sink posture):
+    the run pays about one write's latency instead of three."""
     op_rows = [
         (result.run_id, result.pipeline, m.stage, m.operator, i, m.input_records, m.output_records, m.pass_rate)
         for i, m in enumerate(result.operators)
     ]
-    ops = _one_slice_df(
-        spark,
-        op_rows,
-        "run_id string, pipeline string, stage_name string, operator_name string, position long, "
-        "input_records long, output_records long, pass_rate double",
-    ).withColumn("timestamp", now)
 
     # stage rollup: first op's input, last op's output per stage (reference
     # metrics/collector.py:181-189 serial-operator rule)
@@ -165,35 +178,33 @@ def write_metrics(spark: SparkSession, result, base_path: str) -> None:
             stage_rows[m.stage] = (m.input_records, m.output_records)
         else:
             stage_rows[m.stage] = (stage_rows[m.stage][0], m.output_records)
-    stages = _one_slice_df(
-        spark,
-        [
-            (result.run_id, result.pipeline, s, pos, i, o, (100.0 * o / i if i else 100.0))
-            for pos, (s, (i, o)) in enumerate(stage_rows.items())
-        ],
-        "run_id string, pipeline string, stage_name string, position long, "
-        "input_records long, output_records long, pass_rate double",
-    ).withColumn("timestamp", now)
+    stages = [
+        (result.run_id, result.pipeline, s, pos, i, o, (100.0 * o / i if i else 100.0))
+        for pos, (s, (i, o)) in enumerate(stage_rows.items())
+    ]
 
-    runs = _one_slice_df(
-        spark,
-        [
-            (
-                result.run_id,
-                result.pipeline,
-                result.duration_sec,
-                result.throughput_rps,
-                result.input_records,
-                result.output_records,
-                result.pass_rate,
-            )
-        ],
-        "run_id string, pipeline string, duration_sec double, throughput_rps double, input_records long, output_records long, pass_rate double",
-    ).withColumn("timestamp", now)
+    run = (
+        result.run_id,
+        result.pipeline,
+        result.duration_sec,
+        result.throughput_rps,
+        result.input_records,
+        result.output_records,
+        result.pass_rate,
+    )
 
-    ops.select([f.name for f in OPERATOR_METRICS_SCHEMA.fields]).write.mode("append").parquet(f"{base_path}/operators")
-    stages.select([f.name for f in STAGE_METRICS_SCHEMA.fields]).write.mode("append").parquet(f"{base_path}/stages")
-    runs.select([f.name for f in RUN_METRICS_SCHEMA.fields]).write.mode("append").parquet(f"{base_path}/runs")
+    tables = [
+        ("operators", op_rows, OPERATOR_METRICS_SCHEMA),
+        ("stages", stages, STAGE_METRICS_SCHEMA),
+        ("runs", [run], RUN_METRICS_SCHEMA),
+    ]
+
+    def write(table: str, rows: list[tuple], schema: StructType) -> None:
+        local_rows_df(spark, rows, schema).write.mode("append").parquet(f"{base_path}/{table}")
+
+    with ThreadPoolExecutor(max_workers=len(tables)) as ex:
+        for fut in [ex.submit(write, *t) for t in tables]:
+            fut.result()
 
 
 def training_mix_manifest(

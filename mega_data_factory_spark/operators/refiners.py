@@ -17,6 +17,8 @@ from pyspark.sql import functions as F
 
 from mega_data_factory_spark.functions.hashing import stable_text_hash
 from mega_data_factory_spark.functions.text import (
+    ASCII_WORD_CLASS,
+    is_ascii_word,
     normalize_text,
     normalize_text_sql,
     sql_plain_column,
@@ -99,47 +101,77 @@ class LanguageIdRefiner(Refiner):
 
     This is the classic stopword/n-gram-profile heuristic (Cavnar-Trenkle
     style) reduced to an oracle-checkable closed form.
-    """
+
+    Scale shape: ONE regex scan of the lowered text per row — a
+    ``regexp_extract_all`` over the alternation of every marker that is a
+    run of ASCII word characters — then each language counts its markers
+    in that small match array. The counts equal per-marker
+    :func:`word_occurrences` sums exactly: whole-word matches of
+    word-character runs are maximal runs, so they cannot overlap, and a
+    marker listed twice is summed twice. A marker that is not such a run
+    ('c++', 'a.b', non-ASCII) keeps its own ``regexp_count`` term in the
+    same sum. One regexp_count per marker would scan the text 16 times
+    per row (with the default markers: ~2.3x the refiner's busy time on
+    the Gopher recipe's 5,000 docs, 4 vCPUs)."""
 
     def __init__(self, *, text_col: str = "text", markers: dict[str, tuple[str, ...]] | None = None, name: str | None = None):
         super().__init__(name)
         self.text_col = text_col
         self.markers = markers or LANG_MARKERS
 
-    def scores(self) -> dict[str, Column]:
-        return {
-            lang: reduce(lambda a, b: a + b, [word_occurrences(self.text_col, w) for w in words])
-            for lang, words in self.markers.items()
-        }
+    def _scan_pattern(self) -> str | None:
+        """The one-scan alternation (word-run markers, first-listed order,
+        each once), or None when no marker is a word-character run."""
+        words = dict.fromkeys(w.lower() for ws in self.markers.values() for w in ws if is_ascii_word(w.lower()))
+        if not words:
+            return None
+        return f"(?<!{ASCII_WORD_CLASS})(?:{'|'.join(words)})(?!{ASCII_WORD_CLASS})"
 
     def columns(self, df: DataFrame) -> dict[str, Column]:
-        # Per-language marker counts are bound once PER OUTPUT COLUMN
-        # REFERENCE as lambda variables (the round-10 expression-binding
-        # lesson, see QualityScoreRefiner below): the naive tree referenced
-        # each language's regex-count sum in `greatest` AND in every
-        # when-chain arm, so a pushed-down LanguageCut predicate re-ran ~3x
-        # the marker regexes per row interpreted. Note the invariant's
-        # limit: the dict below returns two getField projections of the
-        # same authored tree, so a Project that materializes BOTH lang_pred
-        # and lang_score still carries two copies of the marker-count
-        # struct — deduplicated by codegen CSE when compiled, but NOT
-        # shared in a CodegenFallback Project or a pushed single-column
-        # filter (which only ever pulls one copy, the stated goal). Values
-        # identical — same counts, same tie-break order.
+        # The match array is bound once as a lambda variable (HOF
+        # arguments are not shared by subexpression elimination, so an
+        # inline copy per count would re-run the scan), and the
+        # per-language counts once more as struct fields (the round-10
+        # expression-binding lesson, see QualityScoreRefiner below): the
+        # naive tree referenced each language's count in `greatest` AND in
+        # every when-chain arm. The dict below returns two getField
+        # projections of the same authored tree, so a Project that
+        # materializes BOTH lang_pred and lang_score carries two copies —
+        # deduplicated by codegen CSE when compiled, but NOT shared in a
+        # CodegenFallback Project or a pushed single-column filter (which
+        # only ever pulls one copy, the stated goal).
         #
         # Fast path (round 12): the same tree authored as ONE SQL string
         # (two F.expr round trips instead of ~45 Column calls at ~3 ms of
-        # py4j latency each — ~140 ms/plan-build measured in
-        # scripts/diag_r12_planbuild.py). Lambda variables are spelled `x`
-        # because pyspark's _create_lambda names them x/y/z, so the
-        # analyzed trees are identical modulo expression ids — pinned by
+        # py4j latency each). Lambda variables are spelled `x` because
+        # pyspark's _create_lambda names them x/y/z, so the analyzed trees
+        # are identical modulo expression ids — pinned by
         # tests/test_refiner_expr_parity.py.
         texts = self.columns_sql_text(df)
         if texts is not None:
             return {k: F.expr(s) for k, s in texts.items()}
-        scores = self.scores()
-        langs = list(scores)
-        base = F.array(F.struct(*[scores[lang].alias(f"s_{i}") for i, lang in enumerate(langs)]))
+        pat = self._scan_pattern()
+        if pat is None:
+            matches = F.array().cast("array<string>")
+        else:
+            matches = F.coalesce(
+                F.regexp_extract_all(F.lower(F.col(self.text_col)), F.lit(pat), F.lit(0)),
+                F.array().cast("array<string>"),
+            )
+
+        def _count(m: Column, w: str) -> Column:
+            if not is_ascii_word(w.lower()):
+                return word_occurrences(self.text_col, w)
+            return F.size(F.filter(m, lambda x: x == F.lit(w.lower()))).cast("long")
+
+        def _score(m: Column, words: tuple[str, ...]) -> Column:
+            return reduce(lambda a, b: a + b, [_count(m, w) for w in words])
+
+        langs = list(self.markers)
+        base = F.transform(
+            F.array(matches),
+            lambda m: F.struct(*[_score(m, self.markers[lang]).alias(f"s_{i}") for i, lang in enumerate(langs)]),
+        )
 
         def _derive(s: Column) -> Column:
             vals = [s[f"s_{i}"] for i in range(len(langs))]
@@ -161,13 +193,24 @@ class LanguageIdRefiner(Refiner):
         ref = sql_plain_column(self.text_col)
         if ref is None:
             return None
-        scores = {
-            lang: " + ".join(word_occurrences_sql(ref, w) for w in words)
-            for lang, words in self.markers.items()
-        }
-        langs = list(scores)
-        fields = ", ".join(f"{scores[lang]} AS s_{i}" for i, lang in enumerate(langs))
-        base = f"array(struct({fields}))"
+        pat = self._scan_pattern()
+        empty = "cast(array() as array<string>)"
+        if pat is None:
+            matches = empty
+        else:
+            matches = f"coalesce(regexp_extract_all(lower({ref}), {sql_string_literal(pat)}, 0), {empty})"
+
+        def score(words: tuple[str, ...]) -> str:
+            return " + ".join(
+                f"cast(size(filter(x, x -> (x = {sql_string_literal(w.lower())}))) as bigint)"
+                if is_ascii_word(w.lower())
+                else word_occurrences_sql(ref, w)
+                for w in words
+            )
+
+        langs = list(self.markers)
+        fields = ", ".join(f"{score(self.markers[lang])} AS s_{i}" for i, lang in enumerate(langs))
+        base = f"transform(array({matches}), x -> struct({fields}))"
         vals = [f"x.s_{i}" for i in range(len(langs))]
         best = f"greatest({', '.join(vals)})" if len(langs) > 1 else vals[0]
         pred = "'und'"
@@ -319,10 +362,17 @@ class GopherQualityRefiner(Refiner):
       * ``gopher_stopword_count`` — how many of the paper's eight
         stopwords appear (presence, not frequency).
 
-    Scale shape: pure Column HOFs over the split arrays — narrow map,
-    fuses into the scan, zero shuffle, zero Python; every expression is
-    in the Java/RE2 common subset, so the DuckDB mirror is
-    token-for-token (tests/test_curation.py holds the driver-gate bar)."""
+    Scale shape: pure Column HOFs — narrow map, fuses into the scan, zero
+    shuffle, zero Python; every expression is in the Java/RE2 common
+    subset, so the DuckDB mirror is token-for-token (tests/test_curation.py
+    holds the driver-gate bar). The text is split into words and into
+    lines ONCE per row: ``columns`` emits the two arrays (and the three
+    whole-text counts) as refiner-private ``__g*`` columns, and
+    ``derived_columns`` computes the eight signals from them by name.
+    Higher-order functions are not shared by subexpression elimination,
+    so spelling the split inside each signal re-splits the text ~11 times
+    for words and ~6 for lines per row (~1.3-1.7x the refiner's busy time
+    on the Gopher recipe's 5,000 docs, 4 vCPUs)."""
 
     def __init__(self, *, text_col: str = "text", name: str | None = None):
         super().__init__(name)
@@ -336,24 +386,6 @@ class GopherQualityRefiner(Refiner):
         if texts is not None:
             return {k: F.expr(s) for k, s in texts.items()}
         t = F.col(self.text_col)
-        words = F.filter(F.split(t, GOPHER_WS), lambda w: w != "")
-        wc = F.size(words)
-        n_chars = F.aggregate(words, F.lit(0).cast("long"), lambda a, w: a + F.length(w))
-        mean_len = F.when(wc > 0, F.round(n_chars.cast("double") / wc, 6))
-        lines = F.split(t, "\n")
-        n_lines = F.size(lines)
-        bullet = F.size(
-            F.filter(
-                lines,
-                lambda u: reduce(
-                    lambda a, b: a | b, [F.trim(u).startswith(g) for g in GOPHER_BULLETS]
-                ),
-            )
-        )
-        ell_lines = F.size(
-            F.filter(lines, lambda u: F.rtrim(u).endswith("...") | F.rtrim(u).endswith("…"))
-        )
-        alpha = F.size(F.filter(words, lambda w: w.rlike("[A-Za-z]")))
         # "how many of the paper's eight stopwords appear" — tokenize ONCE
         # on non-word-char runs and intersect with the stopword set.
         # Exactly equivalent to per-word boundary regexes
@@ -372,18 +404,14 @@ class GopherQualityRefiner(Refiner):
         stop_hits = F.size(
             F.array_intersect(F.array(*[F.lit(w) for w in GOPHER_STOPWORDS]), stop_tokens)
         )
-        per_word = lambda n: F.when(wc > 0, F.round(n.cast("double") / wc, 6))  # noqa: E731
         return {
-            "gopher_word_count": F.when(t.isNotNull(), wc).cast("int"),
-            "gopher_mean_word_len": mean_len,
-            "gopher_hash_ratio": per_word(F.regexp_count(t, F.lit("#"))),
+            "__gw": F.filter(F.split(t, GOPHER_WS), lambda w: w != ""),
+            "__gl": F.split(t, "\n"),
+            "__gh": F.regexp_count(t, F.lit("#")),
             # count RUNS of 3+ dots (or a '…' glyph) — '.....' is one
             # ellipsis, not two; the c4_sentences run-counting lesson
-            "gopher_ellipsis_ratio": per_word(F.regexp_count(t, F.lit(_GOPHER_ELLIPSIS))),
-            "gopher_bullet_line_frac": F.when(n_lines > 0, F.round(bullet.cast("double") / n_lines, 6)),
-            "gopher_ellipsis_line_frac": F.when(n_lines > 0, F.round(ell_lines.cast("double") / n_lines, 6)),
-            "gopher_alpha_word_frac": per_word(alpha),
-            "gopher_stopword_count": F.when(t.isNotNull(), stop_hits).cast("int"),
+            "__ge": F.regexp_count(t, F.lit(_GOPHER_ELLIPSIS)),
+            "__gs": F.when(t.isNotNull(), stop_hits).cast("int"),
         }
 
     def columns_sql_text(self, df: DataFrame) -> dict[str, str] | None:
@@ -392,46 +420,46 @@ class GopherQualityRefiner(Refiner):
         ref = sql_plain_column(self.text_col)
         if ref is None:
             return None
-        words = f"filter(split({ref}, {sql_string_literal(GOPHER_WS)}), x -> (NOT (x = '')))"
-        wc = f"size({words})"
-        n_chars = f"aggregate({words}, cast(0 as bigint), (x, y) -> x + length(y))"
-        mean_len = f"CASE WHEN ({wc} > 0) THEN round(cast({n_chars} as double) / {wc}, 6) END"
-        lines = f"split({ref}, '\\n')"
-        n_lines = f"size({lines})"
-        starts = [f"startswith(trim(x), {sql_string_literal(g)})" for g in GOPHER_BULLETS]
-        bullet_pred = starts[0]
-        for s in starts[1:]:
-            bullet_pred = f"({bullet_pred} OR {s})"
-        bullet = f"size(filter({lines}, x -> {bullet_pred}))"
-        ell_lines = (
-            f"size(filter({lines}, x -> (endswith(rtrim(x), '...') OR endswith(rtrim(x), '…'))))"
-        )
-        alpha = f"size(filter({words}, x -> x RLIKE '[A-Za-z]'))"
         stop_set = ", ".join(sql_string_literal(w) for w in GOPHER_STOPWORDS)
         stop_tokens = f"split(lower({ref}), {sql_string_literal(_GOPHER_NONWORD)})"
         stop_hits = f"size(array_intersect(array({stop_set}), {stop_tokens}))"
+        return {
+            "__gw": f"filter(split({ref}, {sql_string_literal(GOPHER_WS)}), x -> (NOT (x = '')))",
+            "__gl": f"split({ref}, '\\n')",
+            "__gh": f"regexp_count({ref}, '#')",
+            "__ge": f"regexp_count({ref}, {sql_string_literal(_GOPHER_ELLIPSIS)})",
+            "__gs": f"cast(CASE WHEN ({ref} IS NOT NULL) THEN {stop_hits} END as int)",
+        }
+
+    def derived_columns(self, df: DataFrame) -> dict[str, Column]:
+        # One rendering: every input is a private column of fixed name, so
+        # there is no user identifier to quote and no composed twin.
+        # NULL text leaves NULL arrays, which every signal maps to NULL.
+        wc = "size(`__gw`)"
+        n_lines = "size(`__gl`)"
+        n_chars = "aggregate(`__gw`, cast(0 as bigint), (x, y) -> x + length(y))"
+        bullet_pred = " OR ".join(f"startswith(trim(x), {sql_string_literal(g)})" for g in GOPHER_BULLETS)
+        bullet = f"size(filter(`__gl`, x -> ({bullet_pred})))"
+        ell_lines = "size(filter(`__gl`, x -> (endswith(rtrim(x), '...') OR endswith(rtrim(x), '…'))))"
+        alpha = "size(filter(`__gw`, x -> x RLIKE '[A-Za-z]'))"
 
         def per_word(n: str) -> str:
             return f"CASE WHEN ({wc} > 0) THEN round(cast({n} as double) / {wc}, 6) END"
 
-        return {
-            "gopher_word_count": f"cast(CASE WHEN ({ref} IS NOT NULL) THEN {wc} END as int)",
-            "gopher_mean_word_len": mean_len,
-            "gopher_hash_ratio": per_word(f"regexp_count({ref}, '#')"),
-            "gopher_ellipsis_ratio": per_word(
-                f"regexp_count({ref}, {sql_string_literal(_GOPHER_ELLIPSIS)})"
-            ),
-            "gopher_bullet_line_frac": (
-                f"CASE WHEN ({n_lines} > 0) THEN round(cast({bullet} as double) / {n_lines}, 6) END"
-            ),
-            "gopher_ellipsis_line_frac": (
-                f"CASE WHEN ({n_lines} > 0) THEN round(cast({ell_lines} as double) / {n_lines}, 6) END"
-            ),
+        def per_line(n: str) -> str:
+            return f"CASE WHEN ({n_lines} > 0) THEN round(cast({n} as double) / {n_lines}, 6) END"
+
+        texts = {
+            "gopher_word_count": f"cast(CASE WHEN (`__gw` IS NOT NULL) THEN {wc} END as int)",
+            "gopher_mean_word_len": per_word(n_chars),
+            "gopher_hash_ratio": per_word("`__gh`"),
+            "gopher_ellipsis_ratio": per_word("`__ge`"),
+            "gopher_bullet_line_frac": per_line(bullet),
+            "gopher_ellipsis_line_frac": per_line(ell_lines),
             "gopher_alpha_word_frac": per_word(alpha),
-            "gopher_stopword_count": (
-                f"cast(CASE WHEN ({ref} IS NOT NULL) THEN {stop_hits} END as int)"
-            ),
+            "gopher_stopword_count": "`__gs`",
         }
+        return {k: F.expr(s) for k, s in texts.items()}
 
 
 class RepetitionStatsRefiner(Refiner):

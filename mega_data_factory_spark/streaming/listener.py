@@ -31,7 +31,6 @@ import json
 import sys
 
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQueryListener
 from pyspark.sql.types import (
     DoubleType,
@@ -41,6 +40,8 @@ from pyspark.sql.types import (
     StructType,
     TimestampType,
 )
+
+from mega_data_factory_spark.metrics import local_rows_df
 
 TRIGGER_METRICS_SCHEMA = StructType(
     [
@@ -148,13 +149,7 @@ class StreamingMetricsListener(StreamingQueryListener):
             return
         rows, self._pending = self._pending, []
         try:
-            df = self._spark.createDataFrame(
-                rows,
-                "run_id string, pipeline string, query_id string, batch_id long, "
-                "num_input_rows long, input_rows_per_second double, processed_rows_per_second double, "
-                "trigger_execution_ms long, add_batch_ms long, commit_offsets_ms long",
-            ).withColumn("timestamp", F.current_timestamp())
-            df.select([f.name for f in TRIGGER_METRICS_SCHEMA.fields]).write.mode("append").parquet(
+            local_rows_df(self._spark, rows, TRIGGER_METRICS_SCHEMA).write.mode("append").parquet(
                 f"{self.metrics_path}/triggers"
             )
             self.rows_written += len(rows)
@@ -207,24 +202,18 @@ class StreamingMetricsListener(StreamingQueryListener):
         counters have already been surfaced on stderr by ``_flush`` —
         this must never throw on the event thread."""
         try:
-            row = self._spark.createDataFrame(
-                [
-                    (
-                        self.run_id,
-                        self.pipeline,
-                        self.query_id or "",
-                        self.rows_written,
-                        self.flush_failures,
-                        self.rows_dropped,
-                        len(self._pending),
-                    )
-                ],
-                "run_id string, pipeline string, query_id string, rows_written long, "
-                "flush_failures long, rows_dropped long, rows_pending long",
-            ).withColumn("timestamp", F.current_timestamp())
-            row.select([f.name for f in TELEMETRY_HEALTH_SCHEMA.fields]).write.mode(
-                "append"
-            ).parquet(f"{self.metrics_path}/telemetry")
+            row = (
+                self.run_id,
+                self.pipeline,
+                self.query_id or "",
+                self.rows_written,
+                self.flush_failures,
+                self.rows_dropped,
+                len(self._pending),
+            )
+            local_rows_df(self._spark, [row], TELEMETRY_HEALTH_SCHEMA).write.mode("append").parquet(
+                f"{self.metrics_path}/telemetry"
+            )
         except Exception as exc:  # noqa: BLE001 — event-thread must not throw
             print(
                 f"StreamingMetricsListener: telemetry-health write to "

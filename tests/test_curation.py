@@ -1092,3 +1092,41 @@ def test_word_occurrences_expr_parity(spark):
     df2 = df.withColumnRenamed("text", "te`xt")
     n = df2.select(word_occurrences(F.col("`te``xt`"), "the").alias("n")).count()
     assert n == 7
+
+
+def test_word_occurrences_matches_duckdb_mirror(spark):
+    """Spark's word_occurrences and the DuckDB mirror (plans/curation._wc,
+    RE2's ASCII \\b) count the same text identically — including where a
+    non-ASCII letter touches the word ('éla la': Java's \\b on JDK 17 sees
+    no boundary inside 'éla', RE2 sees one before 'la') and for words
+    whose edges are not word characters ('c++' needs a word character
+    beside it, as \\b means there)."""
+    import duckdb
+
+    from mega_data_factory_spark.functions.text import word_occurrences
+    from mega_data_factory_spark.plans.curation import _wc
+
+    rows = [
+        (0, "éla la"),
+        (1, "thé the"),
+        (2, "lá la"),
+        (3, "the cat and the hat la"),
+        (4, "a.b matches a.b but not axb"),
+        (5, "back\\slash c++ c++x xc++ [set] (paren)"),
+        (6, "Tür tür TÜR tür_ la_"),
+        (7, ""),
+        (8, None),
+    ]
+    words = ["la", "the", "a.b", "c++", "[set]", "back\\slash", "tür", "und"]
+    df = spark.createDataFrame(rows, "id long, text string")
+    got = df.select("id", *[word_occurrences("text", w).alias(f"w{i}") for i, w in enumerate(words)])
+    spark_rows = sorted(tuple(r) for r in got.collect())
+    con = duckdb.connect()
+    con.execute("CREATE TABLE t (id BIGINT, text VARCHAR)")
+    con.executemany("INSERT INTO t VALUES (?, ?)", rows)
+    cols = ", ".join(f"{_wc('text', w)} AS w{i}" for i, w in enumerate(words))
+    duck_rows = sorted(tuple(r) for r in con.execute(f"SELECT id, {cols} FROM t").fetchall())
+    assert spark_rows == duck_rows
+    # the non-ASCII neighbours of the bug report, spelled out
+    by_id = {r[0]: r for r in spark_rows}
+    assert (by_id[0][1], by_id[1][2], by_id[2][1]) == (2, 1, 1)

@@ -204,6 +204,83 @@ def test_html_report_from_metrics(spark, tmp_path):
     assert "Streaming triggers" in enriched and "1,200" in enriched
 
 
+def test_metric_rows_round_trip_through_published_schemas(spark, tmp_path):
+    """Metric rows are rendered into SQL text as a local relation: names
+    carrying quotes, backslashes, control characters and non-ASCII text,
+    and a NULL rows_before, must land verbatim in the published schemas,
+    and the report must still render them."""
+    import html
+
+    from mega_data_factory_spark.metrics import (
+        OPERATOR_METRICS_SCHEMA,
+        RUN_METRICS_SCHEMA,
+        STAGE_METRICS_SCHEMA,
+        STORE_METRICS_SCHEMA,
+        local_rows_df,
+        write_metrics,
+        write_store_metrics,
+    )
+    from mega_data_factory_spark.metrics.report import generate_report
+    from mega_data_factory_spark.plans.pipeline import OperatorMetrics, PipelineResult
+
+    names = ["it's", "back\\slash", "ünï — 語", "tab\there\nline"]
+    result = PipelineResult(
+        run_id="r'1\\é",
+        pipeline="p'ü",
+        duration_sec=2.5,
+        input_records=100,
+        output_records=40,
+        operators=[
+            OperatorMetrics(f"stage {n}", n, 100 - 15 * i, 85 - 15 * i) for i, n in enumerate(names)
+        ],
+    )
+    base = str(tmp_path / "metrics")
+    write_metrics(spark, result, base)
+
+    def read(table, schema):
+        df = spark.read.parquet(f"{base}/{table}")
+        assert [(f.name, f.dataType) for f in df.schema.fields] == [
+            (f.name, f.dataType) for f in schema.fields
+        ]
+        return df
+
+    ops = read("operators", OPERATOR_METRICS_SCHEMA).orderBy("position").collect()
+    assert [(r.run_id, r.pipeline, r.stage_name, r.operator_name) for r in ops] == [
+        (result.run_id, result.pipeline, f"stage {n}", n) for n in names
+    ]
+    assert [r.pass_rate for r in ops] == [m.pass_rate for m in result.operators]
+    assert all(r.timestamp is not None for r in ops)
+    stages = read("stages", STAGE_METRICS_SCHEMA).orderBy("position").collect()
+    assert [r.stage_name for r in stages] == [f"stage {n}" for n in names]
+    (run,) = read("runs", RUN_METRICS_SCHEMA).collect()
+    assert (run.run_id, run.duration_sec, run.input_records, run.pass_rate) == (
+        result.run_id, 2.5, 100, 40.0,
+    )
+
+    spark.range(3).selectExpr("CAST(id AS STRING) AS content_key").write.parquet(str(tmp_path / "store"))
+    for rows_before in (None, 7):
+        write_store_metrics(
+            spark, base, run_id=result.run_id, pipeline=result.pipeline,
+            operator_name=names[0], store_path=str(tmp_path / "store"), rows_before=rows_before,
+        )
+    stores = read("stores", STORE_METRICS_SCHEMA).collect()
+    assert sorted((r.operator_name, r.rows, r.rows_before is None) for r in stores) == [
+        (names[0], 3, False), (names[0], 3, True),
+    ]
+
+    # one JVM-only partition: a local relation, no Python-RDD scan
+    frame = local_rows_df(spark, [("a", "b", 1.0, float("inf"), None, 2, float("nan"))], RUN_METRICS_SCHEMA)
+    assert "LocalTableScan" in frame._jdf.queryExecution().executedPlan().toString()
+    assert frame.rdd.getNumPartitions() == 1
+    (r,) = frame.collect()
+    assert r.throughput_rps == float("inf") and r.input_records is None and r.pass_rate != r.pass_rate
+    assert local_rows_df(spark, [], RUN_METRICS_SCHEMA).count() == 0
+
+    page = generate_report(spark, base, result.run_id)
+    for n in names:
+        assert html.escape(n) in page
+
+
 def test_custom_source_and_sink_registries(spark, tmp_path):
     """Reference DataLoaderRegistry/DataWriterRegistry contract: a custom
     format name resolves to a user-registered callable for both ends."""

@@ -202,7 +202,7 @@ def _filter_fixture(spark):
         .withColumn("score", (F.col("doc_id") * 7 % 13).cast("double") / 10)
         .withColumn("_rejection_details", F.lit(None).cast(REJECTION_STRUCT_DDL))
     )
-    df = df.withColumns(GopherQualityRefiner().columns(df))
+    df = GopherQualityRefiner().apply(df)  # columns + derived (the eight signals)
     df = C4HeuristicRefiner().apply(df)  # columns + derived (c4_sentences)
     return df
 
@@ -554,3 +554,139 @@ def test_minhash_band_ids_twin(spark):
     got = sorted(map(tuple, fast.collect()))
     want = sorted(map(tuple, slow.collect()))
     assert got == want and len(got) > 0
+
+
+# --- LanguageIdRefiner: one alternation scan ------------------------------
+
+LANG_EXTRA_ROWS = [
+    (100, "a and andy a-and and_a banana a. A AND"),
+    (101, "c++ c++x xc++ a.b axb a.b. la"),
+    (102, "éla la thé the lá la"),
+    (103, "THE The the der_die das"),
+]
+
+
+@pytest.mark.parametrize(
+    "markers",
+    [
+        pytest.param(None, id="default"),
+        pytest.param(
+            # prefix markers (a / and), a marker listed twice (a), a marker
+            # shared by two languages (and), metacharacter markers
+            {"en": ("a", "and", "a"), "xx": ("and", "c++", "a.b"), "yy": ("la", "el")},
+            id="prefix-dup-shared-meta",
+        ),
+        pytest.param({"only": ("c++", "a.b")}, id="no-word-run-marker"),
+    ],
+)
+def test_language_id_one_scan_counts(spark, markers):
+    """The one-scan counts equal per-language sums of word_occurrences
+    (one regexp_count per marker, the reference counting rule) — per
+    language, and through the argmax."""
+    from pyspark.sql import functions as F
+
+    from mega_data_factory_spark.functions.text import word_occurrences
+
+    df = spark.createDataFrame(ROWS + LANG_EXTRA_ROWS, "doc_id long, text string")
+    markers = markers or R.LANG_MARKERS
+    want: dict[int, list[int]] = {}
+    for lang, words in markers.items():
+        ref = df.select("doc_id", sum(word_occurrences("text", w) for w in words).alias("n"))
+        got = R.LanguageIdRefiner(markers={lang: words}).apply(df).select("doc_id", F.col("lang_score").alias("n"))
+        ref_rows, got_rows = sorted(map(tuple, ref.collect())), sorted(map(tuple, got.collect()))
+        assert got_rows == ref_rows, lang
+        for doc_id, n in ref_rows:
+            want.setdefault(doc_id, []).append(n)
+    langs = list(markers)
+    expect = {}
+    for doc_id, counts in want.items():
+        best = max(counts)
+        expect[doc_id] = (langs[counts.index(best)] if best > 0 else "und", best)
+    out = R.LanguageIdRefiner(markers=markers).apply(df)
+    assert {r.doc_id: (r.lang_pred, r.lang_score) for r in out.collect()} == expect
+
+
+# --- GopherQualityRefiner: split once -------------------------------------
+
+GOPHER_COLS = [
+    "gopher_word_count",
+    "gopher_mean_word_len",
+    "gopher_hash_ratio",
+    "gopher_ellipsis_ratio",
+    "gopher_bullet_line_frac",
+    "gopher_ellipsis_line_frac",
+    "gopher_alpha_word_frac",
+    "gopher_stopword_count",
+]
+
+
+def _gopher_inline_sql(ref: str) -> dict[str, str]:
+    """The earlier inline rendering (each signal re-splitting the text),
+    kept as the value reference for the split-once form."""
+    from mega_data_factory_spark.functions.text import sql_string_literal
+
+    words = f"filter(split({ref}, {sql_string_literal(R.GOPHER_WS)}), x -> (NOT (x = '')))"
+    wc = f"size({words})"
+    n_chars = f"aggregate({words}, cast(0 as bigint), (x, y) -> x + length(y))"
+    lines = f"split({ref}, '\\n')"
+    n_lines = f"size({lines})"
+    bullet_pred = " OR ".join(f"startswith(trim(x), {sql_string_literal(g)})" for g in R.GOPHER_BULLETS)
+    bullet = f"size(filter({lines}, x -> ({bullet_pred})))"
+    ell_lines = f"size(filter({lines}, x -> (endswith(rtrim(x), '...') OR endswith(rtrim(x), '…'))))"
+    alpha = f"size(filter({words}, x -> x RLIKE '[A-Za-z]'))"
+    stop_set = ", ".join(sql_string_literal(w) for w in R.GOPHER_STOPWORDS)
+    stop_hits = f"size(array_intersect(array({stop_set}), split(lower({ref}), '\\\\W+')))"
+
+    def per_word(n: str) -> str:
+        return f"CASE WHEN ({wc} > 0) THEN round(cast({n} as double) / {wc}, 6) END"
+
+    return {
+        "gopher_word_count": f"cast(CASE WHEN ({ref} IS NOT NULL) THEN {wc} END as int)",
+        "gopher_mean_word_len": per_word(n_chars),
+        "gopher_hash_ratio": per_word(f"regexp_count({ref}, '#')"),
+        "gopher_ellipsis_ratio": per_word(f"regexp_count({ref}, {sql_string_literal(R._GOPHER_ELLIPSIS)})"),
+        "gopher_bullet_line_frac": f"CASE WHEN ({n_lines} > 0) THEN round(cast({bullet} as double) / {n_lines}, 6) END",
+        "gopher_ellipsis_line_frac": f"CASE WHEN ({n_lines} > 0) THEN round(cast({ell_lines} as double) / {n_lines}, 6) END",
+        "gopher_alpha_word_frac": per_word(alpha),
+        "gopher_stopword_count": f"cast(CASE WHEN ({ref} IS NOT NULL) THEN {stop_hits} END as int)",
+    }
+
+
+@pytest.mark.parametrize("fixture", ["ROWS", "GOPHER_PLANTED"])
+def test_gopher_split_once_matches_inline(spark, fixture):
+    """The eight signals derived from the once-split word and line arrays
+    equal the earlier inline expressions, value for value and type for
+    type, and the private arrays do not leak into the output."""
+    from mega_data_factory_spark.plans.curation import GOPHER_PLANTED
+
+    rows = ROWS if fixture == "ROWS" else GOPHER_PLANTED
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    new = R.GopherQualityRefiner().apply(df)
+    assert new.columns == ["doc_id", "text", *GOPHER_COLS]
+    old = df.selectExpr("doc_id", "text", *[f"{s} AS {k}" for k, s in _gopher_inline_sql("`text`").items()])
+    assert new.schema == old.schema
+    got = [tuple(str(v) for v in r) for r in new.orderBy("doc_id").collect()]
+    want = [tuple(str(v) for v in r) for r in old.orderBy("doc_id").collect()]
+    assert got == want
+
+
+def test_gopher_pipeline_projection_splits_once(spark):
+    """In the pipeline's optimized plan the Gopher projection (refiner,
+    then its filter's tag) splits the text once per array: the word split,
+    the line split and the stopword split each appear exactly once."""
+    from pyspark.sql import functions as F
+
+    from mega_data_factory_spark.operators.base import REJECTION_STRUCT_DDL
+    from mega_data_factory_spark.operators.filters import GopherQualityFilter
+    from mega_data_factory_spark.plans.pipeline import Pipeline
+
+    df = _fixture_df(spark).withColumn("_rejection_details", F.lit(None).cast(REJECTION_STRUCT_DDL))
+    pipe = Pipeline.__new__(Pipeline)
+    pipe._expr_cache = {}
+    pipe._mid_cached = []
+    out = pipe._apply(pipe._apply(df, R.GopherQualityRefiner()), GopherQualityFilter())
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    assert len(re.findall(r"\bsplit\(", plan)) == 3, plan
+    assert len(re.findall(r"split\(text#\d+, \[", plan)) == 1, plan  # words
+    assert len(re.findall(r"split\(text#\d+, \n", plan)) == 1, plan  # lines
+    assert len(re.findall(r"split\(lower\(text#\d+\)", plan)) == 1, plan  # stopwords
